@@ -5,22 +5,30 @@ databases discovered on disk (geoip/IpDatabaseProvider.java:36-99); a
 missing database tags the event ``_geoip_database_unavailable_<db>``
 (spec/integration/elastic_integration_spec.rb:1034-1049).
 
-Spark-first shape: every lookup database is a *broadcast dimension
-DataFrame* registered on the PipelineRegistry (``registry.dims[name]``).
-The processor compiles to ``df.join(F.broadcast(dim), key, 'left')`` — a
-broadcast hash join, no shuffle of the fact side, which is exactly the
-plan we want at 100 TB (dims are tiny: role/tool metadata, geo tables).
+Spark-first shape: every lookup database is a *broadcast dimension*
+registered on the PipelineRegistry (``registry.dims[name]``).  Each dim
+is collected to the driver once per registry (``local_dim``: rows plus
+schema — dims are tiny by contract, and the reference likewise loads whole
+lookup databases into memory on every node); deduping and range
+segmentation then run in Python over those rows, so compiling a lookup
+runs no Spark job (collecting a ``LocalRelation`` dim — role/tool dims,
+.mmdb loads — runs none either).  A small string-keyed dim compiles to
+one map literal probed per row; other dims become a ``LocalRelation``
+joined with ``F.broadcast`` — no shuffle of the fact side at any scale.
 Miss-path parity: unmatched keys simply add no fields; a missing *database*
 adds the unavailable tag like the reference.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Window, functions as F
+import bisect
+import math
 
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..plans.document import fcol, field_type, guarded
+from ..session import local_frame
 
 
 def _lookup_key(df, cfg, f_name):
@@ -54,7 +62,19 @@ def _multi_emit(df, active, target, looked):
                    {target: looked})
 
 
-def _multi_exact(df, cfg, dim, key_col, props, f_name, target, active):
+def _props_struct(schema, props):
+    """Value struct type of a lookup: the dim's property columns."""
+    return T.StructType(
+        [T.StructField(p, schema[p].dataType) for p in props])
+
+
+def _struct_lit(r, struct_t):
+    """One prepared dim row's properties as a struct literal."""
+    return F.struct(*[F.lit(r[f.name]).cast(f.dataType).alias(f.name)
+                      for f in struct_t.fields])
+
+
+def _multi_exact(df, rows, key_col, struct_t, f_name, target, active):
     """first_only=false over an exact-key dim: per-element resolution.
 
     Literal-sized dims compile to a map literal + ``transform`` — pure
@@ -63,19 +83,14 @@ def _multi_exact(df, cfg, dim, key_col, props, f_name, target, active):
     UDF — the reference's shape exactly (ES loads the whole lookup
     database into memory on every node) and still zero shuffle; only
     rows taking the multi path pay the Python hop."""
-    rows = dim.collect()  # dim already deduped + localized (tiny or
-    # broadcast-sized by contract)
+    props = struct_t.names
     arr = fcol(f_name).cast("array<string>")
-    struct_t = T.StructType(
-        [T.StructField(p, dim.schema[p].dataType) for p in props])
     if not rows:
         looked = F.transform(
             arr, lambda x: F.lit(None).cast(struct_t))
     elif len(rows) <= _MULTI_LITERAL_CAP:
         m = F.create_map(*[c for r in rows for c in (
-            F.lit(str(r[key_col])),
-            F.struct(*[F.lit(r[p]).cast(struct_t[p].dataType).alias(p)
-                       for p in props]))])
+            F.lit(str(r[key_col])), _struct_lit(r, struct_t))])
         looked = F.transform(arr, lambda x: F.try_element_at(m, x))
     else:
         bc = df.sparkSession.sparkContext.broadcast(
@@ -92,28 +107,27 @@ def _multi_exact(df, cfg, dim, key_col, props, f_name, target, active):
     return _multi_emit(df, active, target, looked)
 
 
-def _multi_range(df, cfg, dim, lo, hi, props, f_name, target, active):
-    """first_only=false over a range dim (disjoint segments): literal
-    segment-array + per-element filter for small dims; numpy
-    searchsorted over broadcast sorted bounds for real .mmdb-sized ones."""
+def _multi_range(df, segs, struct_t, f_name, target, active):
+    """first_only=false over a range dim (disjoint ``(lo, hi, props)``
+    segments in ``lo`` order): literal segment-array + per-element filter
+    for small dims; numpy searchsorted over broadcast sorted bounds for
+    real .mmdb-sized ones."""
     from .net import _ip4_to_long
 
-    rows = sorted(dim.collect(), key=lambda r: int(r[lo]))
+    props = struct_t.names
     arr = fcol(f_name).cast("array<string>")
-    struct_t = T.StructType(
-        [T.StructField(p, dim.schema[p].dataType) for p in props])
 
     def _key_long(x):
         return F.when(x.rlike(r"^(\d{1,3}\.){3}\d{1,3}$"),
                       _ip4_to_long(x)).otherwise(x.try_cast("long"))
 
-    if not rows:
+    if not segs:
         looked = F.transform(arr, lambda x: F.lit(None).cast(struct_t))
-    elif len(rows) <= _MULTI_LITERAL_CAP:
+    elif len(segs) <= _MULTI_LITERAL_CAP:
         seg = F.array(*[F.struct(
-            F.lit(int(r[lo])).alias("lo"), F.lit(int(r[hi])).alias("hi"),
-            F.struct(*[F.lit(r[p]).cast(struct_t[p].dataType).alias(p)
-                       for p in props]).alias("v")) for r in rows])
+            F.lit(int(r[0])).alias("lo"), F.lit(int(r[1])).alias("hi"),
+            _struct_lit(dict(zip(props, r[2:])), struct_t).alias("v"))
+            for r in segs])
 
         def one(x):
             kl = _key_long(x)
@@ -124,9 +138,9 @@ def _multi_range(df, cfg, dim, lo, hi, props, f_name, target, active):
     else:
         import numpy as np
         bc = df.sparkSession.sparkContext.broadcast((
-            np.array([int(r[lo]) for r in rows], dtype="int64"),
-            np.array([int(r[hi]) for r in rows], dtype="int64"),
-            [{p: r[p] for p in props} for r in rows]))
+            np.array([int(r[0]) for r in segs], dtype="int64"),
+            np.array([int(r[1]) for r in segs], dtype="int64"),
+            [dict(zip(props, r[2:])) for r in segs]))
 
         @F.pandas_udf(T.ArrayType(struct_t))
         def _mlook(col):
@@ -165,88 +179,84 @@ def _multi_range(df, cfg, dim, lo, hi, props, f_name, target, active):
     return _multi_emit(df, active, target, looked)
 
 
-def _prepared_dim(ctx, cache_key, dim, build):
-    """Compile-time cache of prepared (deduped/segmented, localized) dims.
-
-    Dim preparation collects the dim to the driver (tiny by contract), but
-    doing it on EVERY Router.execute() call re-pays two Spark jobs per
-    lookup — measured ~1s of the flagship's plan-construction time.  The
-    prepared local relation only depends on the registered dim object, so
-    key the cache by (name, id(dim), config) on the registry itself;
-    re-registering a dim naturally invalidates via id()."""
-    cache = getattr(ctx.registry, "_dim_cache", None)
-    if cache is None:
-        cache = ctx.registry._dim_cache = {}
-    if cache_key not in cache:
-        cache[cache_key] = (dim, build())
-    # the cached tuple pins the source dim object alive so its id() (part
-    # of the key) cannot be recycled onto a DIFFERENT dim after gc
-    return cache[cache_key][1]
-
-
-def _localize(df):
-    """Materialize a (tiny, broadcast-sized) dim preparation as a driver-
-    side local relation.  The dedupe/segmentation below needs a groupBy or
-    window — running it lazily would put an Exchange inside the fact
-    query's broadcast subtree and break the engine's zero-shuffle plan
-    guarantee.  Collecting once at compile time mirrors the reference,
-    which loads entire lookup databases (.mmdb) into memory on every node."""
-    return df.sparkSession.createDataFrame(df.collect(), df.schema)
+def sort_key(v, dt):
+    """Python key ordering values of Spark type ``dt`` the way Spark's
+    ascending sort does: nulls first, NaN above every other double, -0.0
+    equal to 0.0, structs and arrays element-wise.  Equal keys are also
+    what Spark groups together (floating-point keys normalized)."""
+    if v is None:
+        return (0,)
+    if isinstance(dt, (T.DoubleType, T.FloatType)):
+        return (1, 1, 0.0) if math.isnan(v) else (1, 0, v + 0.0)
+    if isinstance(dt, T.StructType):
+        return (1, tuple(sort_key(x, f.dataType)
+                         for x, f in zip(v, dt.fields)))
+    if isinstance(dt, T.ArrayType):
+        return (1, tuple(sort_key(x, dt.elementType) for x in v))
+    if isinstance(dt, T.BinaryType):
+        return (1, bytes(v))
+    return (1, v)
 
 
-def _dedupe_dim(dim, key_col: str, props: list[str]):
+def _props_key(schema, props):
+    fields = [(p, schema[p].dataType) for p in props]
+    return lambda r: tuple(sort_key(r[p], dt) for p, dt in fields)
+
+
+def dedupe_rows(rows, schema, key_col: str, props: list[str]):
     """One record per key (reference returns exactly one per IP/lookup key):
     duplicate dim keys in a left join would MULTIPLY fact rows and corrupt
-    downstream sink counts.  Deterministic pick: smallest property tuple."""
-    order = [fcol(p) for p in props] or [fcol(key_col)]
-    w = Window.partitionBy(key_col).orderBy(*order)
-    return _localize(
-        dim.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1).drop("__rn"))
+    downstream sink counts.  Deterministic pick: smallest property tuple
+    in Spark's ascending order.  A NULL key never matches a lookup, so its
+    rows are dropped."""
+    key_dt = schema[key_col].dataType
+    order = _props_key(schema, props or [key_col])
+    best: dict = {}
+    for r in rows:
+        if r[key_col] is None:
+            continue
+        k, o = sort_key(r[key_col], key_dt), order(r)
+        if k not in best or o < best[k][0]:
+            best[k] = (o, r)
+    return [r for _, r in best.values()]
 
 
-def _disjoint_narrowest(dim, lo: str, hi: str, props: list[str]):
+def disjoint_narrowest(rows, schema, lo: str, hi: str, props: list[str]):
     """Rewrite an overlapping range dim into DISJOINT segments where each
     point maps to its narrowest covering range (CIDR semantics: most-
     specific prefix wins — normal in geoip data).  Boundary sweep: every
     [lo, hi] contributes boundaries lo and hi+1; adjacent boundaries form
-    segments; a range covers a segment entirely or not at all; rank covers
-    by width.  All dim-side (broadcast-sized, materialized at compile), so
-    the fact join stays a broadcast range join with at most ONE match per
-    row — no fact-side dedup shuffle needed at any scale."""
-    bounds = (dim.select(F.col(lo).alias("b"))
-              .union(dim.select((F.col(hi) + 1).alias("b"))).distinct())
-    w = Window.orderBy("b")  # dim-sized: single task is fine
-    seg = (bounds.select(F.col("b").alias("__seg_lo"),
-                         (F.lead("b").over(w) - 1).alias("__seg_hi"))
-           .filter(F.col("__seg_hi").isNotNull()))
-    cov = seg.join(dim, (F.col("__seg_lo") >= F.col(lo))
-                   & (F.col("__seg_hi") <= F.col(hi)))
-    wn = Window.partitionBy("__seg_lo").orderBy(
-        (F.col(hi) - F.col(lo)).asc(), F.col(lo).asc())
-    return _localize(
-        cov.withColumn("__rn", F.row_number().over(wn))
-        .filter(F.col("__rn") == 1)
-        .select(F.col("__seg_lo").alias(lo),
-                F.col("__seg_hi").alias(hi), *props))
+    segments; a range covers a run of segments entirely or not at all.
+    Ranges are taken narrowest first (then lowest ``lo``, then smallest
+    property tuple) and each claims the segments no narrower range has.
+    Done on the driver over the collected dim, so the fact join stays a
+    broadcast range join with at most ONE match per row.
+    -> ``(lo, hi, *props)`` tuples in ``lo`` order."""
+    bounds = sorted({b for r in rows
+                     for b in (r[lo], None if r[hi] is None else r[hi] + 1)
+                     if b is not None})
+    nseg = len(bounds) - 1
+    pick = [None] * max(nseg, 0)
+    nxt = list(range(nseg + 1))  # next segment no range has claimed yet
 
+    def free(i):
+        while nxt[i] != i:
+            nxt[i] = nxt[nxt[i]]
+            i = nxt[i]
+        return i
 
-def _literal_map_entry(dim, key_col: str, props: list[str]):
-    """(map-literal Column | None-if-empty, value struct type) for the
-    literal-map lookup fast path, or None when the dim exceeds the
-    literal cap (caller falls back to the broadcast join)."""
-    rows = [r for r in dim.collect() if r[key_col] is not None]
-    if len(rows) > _MULTI_LITERAL_CAP:
-        return None
-    struct_t = T.StructType(
-        [T.StructField(p, dim.schema[p].dataType) for p in props])
-    if not rows:
-        return (None, struct_t)
-    m = F.create_map(*[c for r in rows for c in (
-        F.lit(r[key_col]),
-        F.struct(*[F.lit(r[p]).cast(struct_t[p].dataType).alias(p)
-                   for p in props]))])
-    return (m, struct_t)
+    props_key = _props_key(schema, props)
+    ranges = sorted((r for r in rows
+                     if r[lo] is not None and r[hi] is not None),
+                    key=lambda r: (r[hi] - r[lo], r[lo], props_key(r)))
+    for r in ranges:
+        i = free(bisect.bisect_left(bounds, r[lo]))
+        while i < nseg and bounds[i + 1] - 1 <= r[hi]:
+            pick[i] = r
+            nxt[i] = i + 1
+            i = free(i + 1)
+    return [(bounds[i], bounds[i + 1] - 1, *[r[p] for p in props])
+            for i, r in enumerate(pick) if r is not None]
 
 
 def _broadcast_lookup(df, spec, ctx, dim_name: str, default_target: str,
@@ -271,14 +281,13 @@ def _broadcast_lookup(df, spec, ctx, dim_name: str, default_target: str,
             df = ctx.fail(df, active, spec,
                           f"field [{f_name}] not present as part of path [{f_name}]")
         return df
-    dim = dims[dim_name]
-    key_col = cfg.get("lookup_key", dim.columns[0])
-    props = cfg.get("properties") or [c for c in dim.columns if c != key_col]
-    dim = _prepared_dim(
-        ctx, ("exact", dim_name, id(dim), key_col, tuple(props)), dim,
-        lambda: _dedupe_dim(dim, key_col, props))
+    rows, schema = ctx.registry.local_dim(dim_name)
+    key_col = cfg.get("lookup_key", schema.names[0])
+    props = cfg.get("properties") or [c for c in schema.names if c != key_col]
+    rows = dedupe_rows(rows, schema, key_col, props)
+    struct_t = _props_struct(schema, props)
     if _is_multi(df, cfg, f_name):
-        return _multi_exact(df, cfg, dim, key_col, props, f_name, target,
+        return _multi_exact(df, rows, key_col, struct_t, f_name, target,
                             active)
     # literal-map fast path (r6, guide §2.4/§3.1): a tiny string-keyed dim
     # compiles to ONE map literal probed per row — no BroadcastExchange, no
@@ -287,35 +296,29 @@ def _broadcast_lookup(df, spec, ctx, dim_name: str, default_target: str,
     # flagship (1M rows, local[32]): the two role/tool lookups cost +0.54s
     # as broadcast hash joins (the wide working row is re-copied through
     # each join) vs ~0.05s as fused map probes.  Join-path parity: the dim
-    # is already deduped; a NULL dim key never matches a left join, so it
-    # is dropped; a NULL probe key returns NULL (miss).  Non-string keys
-    # keep the join (map probes in string space would change coercion).
-    key_dt = dim.schema[key_col].dataType
-    if props and isinstance(key_dt, T.StringType):
-        # the map literal is a pure function of the prepared dim — cached
-        # on the registry like the prepared dim itself (r6: re-collecting
-        # even a localized dim pays full query planning, measured ~0.27 s
-        # per lookup per Router.execute compile)
-        entry = _prepared_dim(
-            ctx, ("exact_lit", dim_name, id(dims[dim_name]), key_col,
-                  tuple(props)), dims[dim_name],
-            lambda: _literal_map_entry(dim, key_col, props))
-        if entry is not None:
-            m, struct_t = entry
-            tmp = "__lkv_" + dim_name.replace(".", "_")
-            if m is not None:
-                looked = F.try_element_at(
-                    m, _lookup_key(df, cfg, f_name).cast("string"))
-            else:
-                looked = F.lit(None).cast(struct_t)
-            df = df.withColumn(tmp, looked)
-            updates = {f"{target}.{p}": fcol(tmp)[p] for p in props}
-            df = guarded(df, active, updates)
-            return df.drop(tmp)
+    # is already deduped and NULL-keyed rows dropped; a NULL probe key
+    # returns NULL (miss).  Non-string keys keep the join (map probes in
+    # string space would change coercion).
+    if (props and isinstance(schema[key_col].dataType, T.StringType)
+            and len(rows) <= _MULTI_LITERAL_CAP):
+        tmp = "__lkv_" + dim_name.replace(".", "_")
+        if rows:
+            m = F.create_map(*[c for r in rows for c in (
+                F.lit(r[key_col]), _struct_lit(r, struct_t))])
+            looked = F.try_element_at(
+                m, _lookup_key(df, cfg, f_name).cast("string"))
+        else:
+            looked = F.lit(None).cast(struct_t)
+        df = df.withColumn(tmp, looked)
+        updates = {f"{target}.{p}": fcol(tmp)[p] for p in props}
+        df = guarded(df, active, updates)
+        return df.drop(tmp)
     joined = "__lk_" + dim_name
-    renamed = dim.select(
-        F.col(key_col).alias(joined),
-        *[F.col(p).alias(f"{joined}.{p}") for p in props])
+    renamed = local_frame(
+        df.sparkSession, [(r[key_col], *[r[p] for p in props]) for r in rows],
+        T.StructType([T.StructField(joined, schema[key_col].dataType)]
+                     + [T.StructField(f"{joined}.{p}", schema[p].dataType)
+                        for p in props]))
     df = df.join(F.broadcast(renamed),
                  _lookup_key(df, cfg, f_name).cast("string") == fcol(joined),
                  "left")
@@ -338,8 +341,6 @@ def _broadcast_range_lookup(df, spec, ctx, dim_name: str, default_target: str):
     target = cfg.get("target_field", default_target)
     lo, hi = cfg["range_keys"]
     active = ctx.active(df, spec)
-    dims = getattr(ctx.registry, "dims", {})
-    dim = dims[dim_name]
     if f_name not in df.columns:
         if not cfg.get("ignore_missing", False):
             return ctx.fail(df, active, spec,
@@ -348,17 +349,20 @@ def _broadcast_range_lookup(df, spec, ctx, dim_name: str, default_target: str):
     key = _lookup_key(df, cfg, f_name).cast("string")
     key_long = F.when(key.rlike(r"^(\d{1,3}\.){3}\d{1,3}$"), _ip4_to_long(key)) \
         .otherwise(key.try_cast("long"))
-    props = cfg.get("properties") or [c for c in dim.columns if c not in (lo, hi)]
-    dim = _prepared_dim(
-        ctx, ("range", dim_name, id(dim), lo, hi, tuple(props)), dim,
-        lambda: _disjoint_narrowest(dim, lo, hi, props))
+    rows, schema = ctx.registry.local_dim(dim_name)
+    props = cfg.get("properties") or [c for c in schema.names if c not in (lo, hi)]
+    segs = disjoint_narrowest(rows, schema, lo, hi, props)
+    struct_t = _props_struct(schema, props)
     if _is_multi(df, cfg, f_name):
-        return _multi_range(df, cfg, dim, lo, hi, props, f_name, target,
-                            active)
+        return _multi_range(df, segs, struct_t, f_name, target, active)
     joined = "__rlk_" + dim_name.replace(".", "_")
-    renamed = dim.select(
-        F.col(lo).alias(f"{joined}_lo"), F.col(hi).alias(f"{joined}_hi"),
-        *[F.col(p).alias(f"{joined}.{p}") for p in props])
+    lo_t, hi_t = schema[lo].dataType, schema[hi].dataType
+    bound_t = lo_t if lo_t == hi_t else T.LongType()
+    renamed = local_frame(df.sparkSession, segs, T.StructType(
+        [T.StructField(f"{joined}_lo", bound_t),
+         T.StructField(f"{joined}_hi", bound_t)]
+        + [T.StructField(f"{joined}.{p}", schema[p].dataType)
+           for p in props]))
     df = df.withColumn(f"{joined}_key", key_long)
     df = df.join(F.broadcast(renamed),
                  (fcol(f"{joined}_key") >= fcol(f"{joined}_lo"))

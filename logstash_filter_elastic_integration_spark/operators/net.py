@@ -12,6 +12,7 @@ user_agent :983-1006, network_direction :616-638, registered_domain
 from __future__ import annotations
 
 import re
+import zlib
 
 from pyspark.sql import Column, functions as F
 from pyspark.sql import types as T
@@ -981,7 +982,7 @@ def p_community_id(df, spec, ctx):
     # per-row cost of a single processor).  Multi-referenced non-cheap
     # producers stay staged (SPARK-36718), so each tree now exists — and
     # runs — once per row.
-    hx = "__cidhex_" + str(abs(hash(target)) % 10**6)
+    hx = f"__cidhex_{zlib.crc32(target.encode()):08x}"
     df = df.withColumns({
         f"{hx}s": F.when(active, _ip_hex_any(src_ip)),
         f"{hx}d": F.when(active, _ip_hex_any(dst_ip)),

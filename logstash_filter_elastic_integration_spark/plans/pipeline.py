@@ -24,6 +24,7 @@ ingest/PipelineProcessor.java + SmokeTest recursion golden).
 
 from __future__ import annotations
 
+import hashlib
 import json
 from dataclasses import dataclass, field as dc_field
 from typing import Callable
@@ -98,6 +99,20 @@ class PipelineRegistry:
         self.scripts: dict[str, str] = {}
         from ..operators import PROCESSOR_IMPLS  # late import: avoid cycle
         self.impls: dict[str, Callable] = dict(PROCESSOR_IMPLS)
+        # dim name -> (registered frame, driver rows, schema)
+        self._local_dims: dict[str, tuple] = {}
+
+    def local_dim(self, name: str) -> tuple[list, T.StructType]:
+        """The registered dim ``name`` as driver rows + schema, collected
+        once per registry (dims are small by contract, like the lookup
+        databases the reference loads into memory on every node).  The
+        entry holds the frame it was collected from: assigning a new frame
+        to ``dims[name]`` re-collects."""
+        dim = self.dims[name]
+        hit = self._local_dims.get(name)
+        if hit is None or hit[0] is not dim:
+            hit = self._local_dims[name] = (dim, dim.collect(), dim.schema)
+        return hit[1], hit[2]
 
     def register(self, name: str, definition: str | dict) -> IngestPipeline:
         p = IngestPipeline.from_json(name, definition)
@@ -170,7 +185,8 @@ class CompileContext:
         handlers = spec.on_failure
         if handlers:
             # run the on_failure sub-chain only on the rows that just failed
-            marker = f"__pfail_{abs(hash((spec.type, id(spec)))) % 10**8}"
+            marker = "__pfail_" + _digest(
+                [self.compile_stack, spec.type, spec.config])
             df = df.withColumn(marker, F.coalesce(cond, F.lit(False)))
             df = guarded(df, fcol(marker), {
                 "_ingest.on_failure_message": msg,
@@ -203,6 +219,14 @@ class CompileContext:
             F.when(fcol(FAILURE).isNull() & F.coalesce(cond, F.lit(False)), failure)
             .otherwise(fcol(FAILURE)),
         )
+
+
+def _digest(obj) -> str:
+    """Short stable digest of a JSON-able value, for generated column names
+    that must not depend on the process (``hash()`` is salted per process,
+    ``id()`` is an address)."""
+    text = json.dumps(obj, sort_keys=True, default=str)
+    return hashlib.blake2b(text.encode(), digest_size=4).hexdigest()
 
 
 def _compile_chain(df: DataFrame, specs: list[ProcessorSpec],

@@ -26,7 +26,7 @@ that defuses hot-conversation / hot-sink skew in output file sizes.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field as dc_field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -54,18 +54,6 @@ class Router:
     # the reference's reroute loop.
     pipeline_name: str | None = None
     pipeline_field: str | None = None
-    # compiled-plan cache: (analyzed input LogicalPlan, compiled output
-    # DataFrame).  Keyed by Catalyst ``sameResult`` — the exact identity
-    # Spark's own CacheManager uses for cross-query cache reuse — so a hit
-    # is PROVABLY the same input relation and the compiled (lazy, never
-    # executed here) plan is reusable verbatim.  This removes the repeated
-    # driver-side pipeline compile (~0.5-1.5 s of py4j round-trips per
-    # call) when the same Router executes over the same input more than
-    # once (bench passes, resumed jobs, per-sink re-reads); no data or
-    # results are cached — every action on the returned frame recomputes
-    # from the source.
-    _exec_cache: list = dc_field(default_factory=list, repr=False,
-                                 compare=False)
 
     def resolve_index(self, df: DataFrame) -> DataFrame:
         if "_index" in df.columns:
@@ -206,20 +194,6 @@ class Router:
         via hop k-1's reroute targets (static analysis above), and the loop
         stops as soon as no reroute-capable pipeline remains — so a
         reroute-free routing table compiles to exactly one narrow pass."""
-        try:
-            jplan = df._jdf.queryExecution().analyzed()
-            for cached_plan, cached_out in self._exec_cache:
-                if cached_plan.sameResult(jplan):
-                    return cached_out
-        except Exception:
-            jplan = None
-        out = self._execute_impl(df)
-        if jplan is not None:
-            self._exec_cache.append((jplan, out))
-            del self._exec_cache[:-4]
-        return out
-
-    def _execute_impl(self, df: DataFrame) -> DataFrame:
         df = self.resolve_index(df)
         df = prepare(df)
         df = df.withColumn("__pipeline", self._resolve_pipeline_name(df))

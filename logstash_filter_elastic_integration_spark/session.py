@@ -10,7 +10,27 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` default: 16g, capped at half of the host's
+    physical memory (``MemTotal`` in /proc/meminfo) so a default session
+    never asks for more heap than the machine has.  ``SPARK_DRIVER_MEM``
+    overrides it."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    mb = 16 * 1024
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    mb = min(mb, int(line.split()[1]) // 1024 // 2)
+                    break
+    except OSError:
+        pass
+    return f"{max(mb, 1024)}m"
 
 
 def get_spark(
@@ -40,7 +60,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "50000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
         # dynamic-partition fan-out writes: concurrent writers instead of
@@ -73,9 +93,44 @@ def get_spark(
         # shared conf mid-session (the strict duplicate REJECTION is an
         # explicit conf-independent check in operators/parse.py)
         .config("spark.sql.variant.allowDuplicateKeys", "true")
+        # PySpark origin capture off: with it on, every Column / F.* call
+        # on the driver does getActiveSession, a conf read, a Python stack
+        # walk and PySparkCurrentOrigin.set/clear — three to four extra
+        # py4j round trips per call, more than half of a pipeline
+        # compile's traffic.  The captured call site would point into the
+        # engine's operator modules, never into the user's pipeline JSON;
+        # what is given up is that Python call site in the DataFrame
+        # context of runtime errors (the SQL error itself is unchanged).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list, schema) -> DataFrame:
+    """Driver-side rows -> a DataFrame over a ``LocalRelation``.
+
+    ``createDataFrame(list)`` builds a Python-RDD relation: every action on
+    it, even a collect of three rows, is a Spark job that starts Python
+    workers.  Going through an Arrow table instead yields a
+    ``LocalRelation``, which Spark collects on the driver without a job
+    and broadcasts without a Python hop.  Rows are tuples or Rows in
+    ``schema`` field order.  Values Arrow cannot take, and timestamps
+    (collected as naive local datetimes, which Arrow would read as UTC),
+    fall back to the plain path."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if "timestamp" in schema.simpleString():
+        return spark.createDataFrame(rows, schema)
+    names = schema.names
+    try:
+        table = pa.Table.from_pylist(
+            [dict(zip(names, r)) for r in rows],
+            schema=to_arrow_schema(schema))
+    except (pa.ArrowException, TypeError, ValueError, OverflowError):
+        return spark.createDataFrame(rows, schema)
+    return spark.createDataFrame(table, schema)

@@ -18,6 +18,9 @@ Text mix (seeded by id hash):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import types as T
+
+from ..session import local_frame
 
 SEED = 42
 
@@ -102,15 +105,23 @@ def transcripts(spark: SparkSession, n_rows: int, n_convs: int | None = None,
         ts.alias("ts"))
 
 
+def _strings(*names: str) -> list[T.StructField]:
+    return [T.StructField(n, T.StringType()) for n in names]
+
+
 def role_dim(spark: SparkSession) -> DataFrame:
-    """Broadcast enrichment dim (FIXTURES.md §2): complete role cover."""
+    """Broadcast enrichment dim (FIXTURES.md §2): complete role cover.
+    A ``LocalRelation``, like ``tool_dim``: collecting it at compile time
+    runs no Spark job."""
     rows = [
         ("user", "human", True),
         ("assistant", "model", False),
         ("system", "control", False),
         ("tool", "machine", False),
     ]
-    return spark.createDataFrame(rows, "role string, role_group string, is_human boolean")
+    return local_frame(spark, rows, T.StructType(
+        _strings("role", "role_group")
+        + [T.StructField("is_human", T.BooleanType())]))
 
 
 def tool_dim(spark: SparkSession) -> DataFrame:
@@ -121,4 +132,5 @@ def tool_dim(spark: SparkSession) -> DataFrame:
         ("code_exec", "compute", "runtime"),
         ("browser", "retrieval", "platform"),
     ]
-    return spark.createDataFrame(rows, "tool string, tool_category string, tool_owner string")
+    return local_frame(spark, rows, T.StructType(
+        _strings("tool", "tool_category", "tool_owner")))

@@ -6,7 +6,7 @@ The reference resolves IPs against .mmdb files loaded per node
 the *lookup* as a broadcast range join (operators/enrich.py) and moves the
 file parsing to the driver: this module walks the database's binary search
 tree once, enumerates every network with its (flattened) record, and
-returns rows ready for ``registry.dims[db] = spark.createDataFrame(...)``.
+returns rows ready for ``registry.dims[db]``.
 
 Format implemented from the public MaxMind DB specification
 (https://maxmind.github.io/MaxMind-DB/): metadata marker, 24/28/32-bit
@@ -243,7 +243,8 @@ def load_mmdb_dim(spark, path: str, ipv4_only: bool = True):
         else:
             dt = T.StringType()
         fields.append(T.StructField(k, dt))
-    return spark.createDataFrame(data, T.StructType(fields))
+    from ..session import local_frame
+    return local_frame(spark, data, T.StructType(fields))
 
 
 # --------------------------------------------------- fixture writer --------

@@ -1,3 +1,5 @@
+import os
+
 import pytest
 
 from logstash_filter_elastic_integration_spark import get_spark
@@ -5,7 +7,10 @@ from logstash_filter_elastic_integration_spark import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", cores=8, shuffle_partitions=8)
+    # local[N] follows the host: SPARK_GRAFT_CPUS, else the usable cores
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS")
+                or len(os.sched_getaffinity(0)))
+    s = get_spark(app_name="tests", cores=cores, shuffle_partitions=8)
     yield s
 
 

@@ -1,8 +1,7 @@
-"""Focused pins for the r6 compile caches: every cache is PLAN-level
-(lazy frames, keyed/gated by Catalyst sameResult) and never result-level.
+"""Focused pins for the compile path and the remaining compile caches.
 
-- Router.execute returns the SAME compiled frame for a provably-identical
-  input relation and a DIFFERENT one when the input changes;
+- Router.execute keeps no plan cache: a re-read of a grown input is seen,
+  and a fresh flagship compile runs no Spark job within a py4j budget;
 - _pipe's compiled-pipeline cache hits on identical (spec, input) and
   misses when the processor spec changes;
 - the pure-plan query memo wraps exactly the whitelisted builders —
@@ -36,38 +35,60 @@ def _mini_router():
     return Router(registry=reg, routing={"logs-a-default": "p"})
 
 
-def test_router_exec_cache_hits_on_same_plan(spark):
-    r = _mini_router()
-    df = spark.range(10).select(
-        F.col("id"), F.lit("logs-a-default").alias("_index"))
-    out1 = r.execute(df)
-    out2 = r.execute(spark.range(10).select(
-        F.col("id"), F.lit("logs-a-default").alias("_index")))
-    assert out1 is out2  # sameResult plan -> compiled frame reused
-    # a different input relation must NOT hit
-    out3 = r.execute(spark.range(11).select(
-        F.col("id"), F.lit("logs-a-default").alias("_index")))
-    assert out3 is not out1
-    assert out1.count() == 10 and out3.count() == 11
-
-
-def test_router_exec_cache_holds_no_materialized_data(spark, tmp_path):
-    """A cache hit is a PLAN reuse, not a result: the cached frame's plan
-    still roots at the source scan (no InMemoryRelation / LogicalRDD
-    snapshot), so every action recomputes from the source files."""
+def test_router_reexecute_sees_appended_files(spark, tmp_path):
+    """Executing the same Router over a re-read of a grown directory sees
+    the new files: Router.execute compiles the plan it is given and keeps
+    nothing from an earlier call (a plan cache gated by Catalyst
+    sameResult once replayed the first call's file listing here)."""
     p = str(tmp_path / "src")
-    spark.range(5).withColumn("_index", F.lit("logs-a-default")) \
-        .write.mode("overwrite").parquet(p)
+    rows = spark.range(5).withColumn("_index", F.lit("logs-a-default"))
+    rows.write.mode("overwrite").parquet(p)
     r = _mini_router()
-    df1 = spark.read.parquet(p)
-    out = r.execute(df1)
-    assert out is r.execute(spark.read.parquet(p))  # hit
-    plan = out._jdf.queryExecution().analyzed().toString()
-    assert "Relation" in plan and "parquet" in plan
-    for snapshot_node in ("InMemoryRelation", "LogicalRDD",
-                          "Scan ExistingRDD"):
-        assert snapshot_node not in plan
-    assert out.count() == 5
+    assert r.execute(spark.read.parquet(p)).count() == 5
+    spark.range(5, 8).withColumn("_index", F.lit("logs-a-default")) \
+        .write.mode("append").parquet(p)
+    assert r.execute(spark.read.parquet(p)).count() == 8
+
+
+def test_fresh_flagship_compile_budget(spark, tmp_path, monkeypatch):
+    """A fresh flagship Router.execute is a driver-only compile: no Spark
+    job (dims are LocalRelations deduped on the driver) and at most 4,000
+    py4j round trips (PySpark origin capture is off in the session)."""
+    import gc
+
+    from py4j.clientserver import ClientServerConnection
+
+    from logstash_filter_elastic_integration_spark.flagship import (
+        build_router, with_datastream)
+    from logstash_filter_elastic_integration_spark.sources.datagen import (
+        transcripts)
+
+    p = str(tmp_path / "transcripts")
+    transcripts(spark, 10_000).write.mode("overwrite").parquet(p)
+    tdf = with_datastream(spark.read.parquet(p))
+    router = build_router(spark)
+
+    calls = [0]
+    send = ClientServerConnection.send_command
+
+    def counting_send(self, command, *a, **kw):
+        calls[0] += 1
+        return send(self, command, *a, **kw)
+
+    sc = spark.sparkContext
+    gc.collect()
+    sc.setJobGroup("fresh-compile", "fresh flagship compile")
+    monkeypatch.setattr(ClientServerConnection, "send_command",
+                        counting_send)
+    try:
+        out = router.execute(tdf)
+    finally:
+        monkeypatch.undo()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("fresh-compile")) == []
+    assert calls[0] <= 4000, calls[0]
+    assert "__sink" in out.columns
 
 
 def test_pipe_cache_hit_and_spec_miss(spark):

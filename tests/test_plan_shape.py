@@ -307,3 +307,49 @@ def test_user_agent_codegen_compiles_full_scale_bank(spark, tmp_path):
     assert last["user_agent.device.name"] == "Device 79"
     assert got["SynthAgent0000/1.0"]["user_agent.name"] == "SynthAgent0000"
     assert got["nothing-matches"]["user_agent.name"] == "Other"
+
+
+_GENERATED_NAMES_CHILD = r"""
+import re
+from logstash_filter_elastic_integration_spark.plans import (
+    PipelineRegistry, run_pipeline)
+from logstash_filter_elastic_integration_spark.session import get_spark
+
+spark = get_spark(app_name="names", cores=1, extra_conf={
+    "spark.sql.debug.maxToStringFields": "1000"})
+reg = PipelineRegistry()
+reg.register("p", {"processors": [
+    {"community_id": {"target_field": "cid", "on_failure": [
+        {"set": {"field": "cid_error", "value": "x"}}]}}]})
+df = spark.createDataFrame(
+    [("10.0.0.1", 1234, "10.0.0.2", 80, "tcp")],
+    "`source.ip` string, `source.port` int, `destination.ip` string, "
+    "`destination.port` int, `network.transport` string")
+plan = run_pipeline(df, "p", reg)._jdf.queryExecution().analyzed()
+print(sorted(set(re.findall(r"__(?:pfail|cidhex)_\w+?(?=#)",
+                            plan.toString()))))
+spark.stop()
+"""
+
+
+def test_generated_column_names_do_not_depend_on_the_process(tmp_path):
+    """Compiler-generated column names (on_failure markers, staged
+    community_id columns) come out the same in two processes with
+    different hash seeds, so plans and their names are reproducible."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    names = []
+    for seed in ("1", "2"):
+        env = dict(os.environ, PYTHONHASHSEED=seed, SPARK_DRIVER_MEM="512m",
+                   PYTHONPATH=os.pathsep.join(
+                       [repo, os.environ.get("PYTHONPATH", "")]))
+        out = subprocess.run(
+            [sys.executable, "-c", _GENERATED_NAMES_CHILD], env=env,
+            cwd=str(tmp_path), capture_output=True, text=True, timeout=300,
+            check=True)
+        names.append(out.stdout.strip().splitlines()[-1])
+    assert "__pfail_" in names[0] and "__cidhex_" in names[0], names[0]
+    assert names[0] == names[1]
