@@ -12,39 +12,10 @@ and a ``filter`` method standing in for ``multi_filter``.
 
 from __future__ import annotations
 
-import re
+from pyspark.sql import DataFrame
 
-from pyspark.sql import DataFrame, functions as F
-
-from .plans.document import fcol
-from .plans.pipeline import PipelineRegistry, run_pipeline
+from .plans.pipeline import PipelineRegistry
 from .router import Router
-
-_SPRINTF = re.compile(r"%\{\[?([^}\]]+)\]?\}")
-
-
-def sprintf_column(df: DataFrame, template: str):
-    """Logstash sprintf template ('pipe-%{[service]}') -> Column; returns
-    None for any row with an unresolved field (the reference SKIPS such
-    events — SprintfTemplateEventToPipelineNameResolver contract)."""
-    parts = []
-    pos = 0
-    missing = F.lit(False)
-    for m in _SPRINTF.finditer(template):
-        if m.start() > pos:
-            parts.append(F.lit(template[pos:m.start()]))
-        ref = m.group(1).replace("][", ".")
-        if ref in df.columns:
-            parts.append(fcol(ref).cast("string"))
-            missing = missing | fcol(ref).isNull()
-        else:
-            missing = F.lit(True)
-            parts.append(F.lit(""))
-        pos = m.end()
-    if pos < len(template):
-        parts.append(F.lit(template[pos:]))
-    col = F.concat(*parts) if parts else F.lit(template)
-    return F.when(~missing, col)
 
 
 class SparkIngestFilter:
@@ -82,9 +53,8 @@ class SparkIngestFilter:
         # FILENAME — exactly how the reference matches a processor's
         # database_file.  Loaded lazily on first filter() (needs a session).
         self._geoip_dir = geoip_database_directory
-        self.pipeline_name = pipeline_name  # sprintf template override
         self.router = Router(registry=self.registry, routing=routing or {},
-                             max_hops=max_hops)
+                             max_hops=max_hops, pipeline_name=pipeline_name)
 
     def filter(self, df: DataFrame) -> DataFrame:
         if self._geoip_dir is not None:
@@ -96,19 +66,4 @@ class SparkIngestFilter:
                     self.registry.dims[fn] = load_mmdb_dim(
                         df.sparkSession, os.path.join(self._geoip_dir, fn))
             self._geoip_dir = None
-        if self.pipeline_name is not None:
-            return self._filter_by_template(df)
         return self.router.execute(df)
-
-    def _filter_by_template(self, df: DataFrame) -> DataFrame:
-        """Template resolution path: resolve per-row pipeline name; `_none`
-        or unresolved rows pass through untouched
-        (EventProcessor.java:128-139)."""
-        from .plans.pipeline import compile_pipeline, finalize, prepare
-
-        name_col = sprintf_column(df, self.pipeline_name)
-        df = prepare(df.withColumn("__pipeline", name_col))
-        for name, pipe in self.registry.pipelines.items():
-            gate = fcol("__pipeline") == name
-            df = compile_pipeline(pipe, self.registry, extra_gate=gate)(df)
-        return finalize(df).drop("__pipeline")

@@ -19,6 +19,7 @@ patterns is included.
 
 from __future__ import annotations
 
+import functools
 import re
 import time
 from dataclasses import dataclass, field
@@ -405,16 +406,11 @@ class GrokCompiler:
 # a real cluster, once per task forever).  Executors reuse worker
 # processes, so a module-level cache keyed by the pattern/bank content
 # compiles once per WORKER instead: the closure captures only strings.
+# The bound keeps a long-lived worker from holding every bank it has seen.
 # ---------------------------------------------------------------------------
-_COMPILE_CACHE: dict = {}
-
-
+@functools.lru_cache(maxsize=64)
 def cached_compile(patterns: tuple[str, ...],
                    extra_items: tuple[tuple[str, str], ...] = ()) -> CompiledGrok:
     """Process-level memoized GrokCompiler().compile() — see note above."""
-    key = (patterns, extra_items)
-    hit = _COMPILE_CACHE.get(key)
-    if hit is None:
-        hit = _COMPILE_CACHE[key] = GrokCompiler(
-            extra_patterns=dict(extra_items) or None).compile(list(patterns))
-    return hit
+    return GrokCompiler(
+        extra_patterns=dict(extra_items) or None).compile(list(patterns))

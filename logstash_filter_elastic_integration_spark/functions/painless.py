@@ -998,50 +998,11 @@ def _eval(node: ast.AST, c: _Ctx) -> tuple[Column, object]:
     raise UnsupportedScriptError(f"unsupported syntax: {ast.dump(node)}")
 
 
-# compiled-condition cache (r6): the boolean Column for a given source is
-# a pure function of (source, params, and — per ctx path the compilation
-# resolved — the resolver's schema signature for that path).  Keyed two-
-# level: (source, params-repr) -> (resolved paths, {signature: Column}).
-# Unresolved Columns are frame-independent, so reuse across compiles is
-# safe whenever the signature matches; resolvers without a .signature
-# hook (none in-tree) skip the cache.
-_COND_CACHE: dict = {}
-
-
 def compile_condition(source: str, resolve, params: dict | None = None) -> Column:
     """Painless ``if`` condition -> boolean Column (null-safe: null -> false)."""
-    sig_fn = getattr(resolve, "signature", None)
-    if sig_fn is None:
-        src, lits = _protect_literals(source)
-        src, regexes = _protect_regexes(src)
-        return _compile_condition_p(src, lits, resolve, params, regexes)
-    key0 = (source, repr(sorted(params.items())) if params else None)
-    entry = _COND_CACHE.get(key0)
-    if entry is not None:
-        paths, by_sig = entry
-        col = by_sig.get(tuple(sig_fn(p) for p in paths))
-        if col is not None:
-            return col
-    recorded: list[str] = []
-
-    def rec(path: str):
-        recorded.append(path)
-        return resolve(path)
-
-    def rec_present(path: str):
-        recorded.append(path)
-        return resolve.present(path)
-
-    rec.present = rec_present
     src, lits = _protect_literals(source)
     src, regexes = _protect_regexes(src)
-    col = _compile_condition_p(src, lits, rec, params, regexes)
-    paths = tuple(dict.fromkeys(recorded))
-    if entry is None:
-        entry = _COND_CACHE[key0] = (paths, {})
-    # paths are deterministic per source, so entry's path tuple matches
-    entry[1][tuple(sig_fn(p) for p in paths)] = col
-    return col
+    return _compile_condition_p(src, lits, resolve, params, regexes)
 
 
 def _compile_condition_p(source: str, lits: list[str], resolve,

@@ -235,15 +235,6 @@ def _segmented_first_match(pairs, barrier=False, seg=_UA_SEG):
     return F.expr("coalesce(" + ", ".join(segs) + ")")
 
 
-# compiled chain cache (r6): the three segmented CASE chains are pure
-# functions of the regex bank (builtin or regex_file) and reference only
-# the fixed __ua_act/__ua_src staging columns, so the unresolved Column
-# trees are reusable across every p_user_agent compile in the session.
-# Building them fresh cost ~0.3s of driver time per query build (py4j +
-# JVM-side parse of three multi-KB SQL expressions).
-_UA_CHAIN_CACHE: dict = {}
-
-
 def p_user_agent(df, spec, ctx):
     cfg = spec.config
     f_name = cfg["field"]
@@ -320,12 +311,7 @@ def p_user_agent(df, spec, ctx):
     # curated builtin bank (see ua_bank.default_regex_file).
     from .ua_bank import default_regex_file, load_uap_regexes_cached
     regex_file = cfg.get("regex_file") or default_regex_file()
-    cache_key = (df.sparkSession.sparkContext.applicationId,
-                 regex_file or "__builtin__")
-    cached = _UA_CHAIN_CACHE.get(cache_key)
-    if cached is not None:
-        pass  # chains unpacked below
-    elif regex_file:
+    if regex_file:
         # ES regex_file option (docs/index.asciidoc:173-200): a full
         # uap-core regexes.yaml used WHOLESALE — exact ua-parser group
         # numbering ($N templates; group 1 = family/os/device slot,
@@ -379,16 +365,18 @@ def p_user_agent(df, spec, ctx):
                     f"named_struct('d', {_family_of(dname, drx)})")
                    for dname, drx in _UA_DEVICES]
 
-    if cached is None:
-        b_chain = _segmented_first_match(b_pairs, barrier=True)
-        o_chain = _segmented_first_match(o_pairs)
-        d_chain = _segmented_first_match(d_pairs)
+    b_chain = _segmented_first_match(b_pairs, barrier=True)
+    o_chain = _segmented_first_match(o_pairs)
+    d_chain = _segmented_first_match(d_pairs)
+    chains = {}
+    bcol = ocol = dcol = None
+    if cfg.get("extract_device_type", False):
         # device-type classification is a pure function of the UA string
         # too — computed with the chains (i.e. on the distinct-parse dim
         # when enabled) instead of per fact row: its 4 rlike groups were
         # the dominant per-row cost of the join-back stage (r6)
         usrc = F.col("__ua_src")
-        t_chain = (
+        chains["__uat"] = (
             F.when(usrc.rlike(r"(?i)bot|spider|crawler|slurp|curl|wget|"
                               r"python-requests|urllib|go-http-client|okhttp"),
                    "Robot")
@@ -400,13 +388,6 @@ def p_user_agent(df, spec, ctx):
                              r"HbbTV|NetCast\.TV|Web0S.*?TV|BRAVIA|VIERA|"
                              r"GoogleTV"), "Smart TV")
             .otherwise("Desktop"))
-        _UA_CHAIN_CACHE[cache_key] = (b_chain, o_chain, d_chain, t_chain)
-    else:
-        b_chain, o_chain, d_chain, t_chain = cached
-    chains = {}
-    bcol = ocol = dcol = None
-    if cfg.get("extract_device_type", False):
-        chains["__uat"] = t_chain
     if b_chain is not None:
         chains["__uab"] = b_chain
         bcol = "__uab"

@@ -149,17 +149,6 @@ def resolver_for(df: DataFrame):
         return resolve_field(df, path)
     # presence probe for containsKey lowerings (explicit-null aware)
     resolve.present = lambda path: present_expr(df, path)
-
-    # schema signature of a path: everything resolve/present's OUTPUT
-    # depends on for that path.  Lets compile_condition cache compiled
-    # Columns across frames whose relevant schema is identical (r6 —
-    # condition compilation is pure driver time, paid per processor per
-    # Router.execute).
-    def signature(path: str):
-        dt = field_type(df, path)
-        return (dt.simpleString() if dt is not None else None,
-                "_extras" in df.columns, NULLSET in df.columns)
-    resolve.signature = signature
     return resolve
 
 

@@ -16,10 +16,13 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import (
+    DataFrame, SparkSession, Window, functions as F, types as T,
+)
 
 from .plans.pipeline import PipelineRegistry, run_pipeline
 from .plans.document import fcol
+from .session import local_frame
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -30,64 +33,12 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
 
 
-#: compiled-pipeline cache for the demo queries: (appId, processor-spec
-#: JSON, dim names) -> (analyzed input plan, analyzed dim plans, compiled
-#: lazy output).  A hit requires Catalyst ``sameResult`` on the input AND
-#: every dim plan — the plan-identity test Spark's own CacheManager uses —
-#: so reuse is provably over the same relations.  Only the driver-side
-#: pipeline COMPILE (py4j round-trips) is skipped; the returned frame is
-#: lazy and every action recomputes from the parquet source.  Dims here
-#: are driver-literal config tables (createDataFrame over constants), so
-#: nothing data-derived is memoized.
-_PIPE_CACHE: dict = {}
-
-
-#: per-application memo for the demo queries' tiny CONFIG-LITERAL dim
-#: tables (createDataFrame over in-code constants).  PySpark's
-#: createDataFrame yields a LogicalRDD plan whose sameResult compares RDD
-#: identity, so a per-call rebuild could never hit the compiled-pipeline
-#: cache below; reusing the one DataFrame object restores plan identity.
-#: Config data only — nothing derived from the input tables lives here.
-_DIM_MEMO: dict = {}
-
-
-def _memo_dim(spark, key, build):
-    app = spark.sparkContext.applicationId
-    ent = _DIM_MEMO.get((app, key))
-    if ent is None:
-        if any(k[0] != app for k in _DIM_MEMO):
-            _DIM_MEMO.clear()
-        ent = _DIM_MEMO[(app, key)] = build()
-    return ent
-
-
-def _pipe(spark, df, processors, dims=None):
-    import json
-    try:
-        key = (spark.sparkContext.applicationId,
-               json.dumps(processors, sort_keys=True, default=str),
-               tuple(sorted(dims)) if dims else ())
-        jplan = df._jdf.queryExecution().analyzed()
-        dim_plans = [d._jdf.queryExecution().analyzed()
-                     for _, d in sorted((dims or {}).items())]
-        ent = _PIPE_CACHE.get(key)
-        if (ent is not None and ent[0].sameResult(jplan)
-                and len(ent[1]) == len(dim_plans)
-                and all(a.sameResult(b)
-                        for a, b in zip(ent[1], dim_plans))):
-            return ent[2]
-    except Exception:
-        key = None
+def _pipe(df, processors, dims=None):
     reg = PipelineRegistry()
     reg.register("q", {"processors": processors})
     if dims:
         reg.dims.update(dims)
-    out = run_pipeline(df, "q", reg)
-    if key is not None:
-        _PIPE_CACHE[key] = (jplan, dim_plans, out)
-        while len(_PIPE_CACHE) > 64:
-            _PIPE_CACHE.pop(next(iter(_PIPE_CACHE)))
-    return out
+    return run_pipeline(df, "q", reg)
 
 
 # --------------------------------------------------------------- parse -----
@@ -97,7 +48,7 @@ def q_pipe_grok_typed(spark, sf_dir):
     df = ev.withColumn("msg", F.format_string(
         "%d %s %d", F.col("user_id"), F.col("event_type"),
         F.floor("value").cast("long")))
-    out = _pipe(spark, df, [
+    out = _pipe(df, [
         {"grok": {"field": "msg",
                   "patterns": ["^%{INT:uid:int} %{WORD:etype} %{INT:val:int}$"]}}])
     return out.select("event_id", "uid", "etype", "val")
@@ -116,7 +67,7 @@ def q_pipe_dissect(spark, sf_dir):
                                            F.col("user_id").cast("string"),
                                            "event_type",
                                            F.col("event_id").cast("string")))
-    out = _pipe(spark, df, [
+    out = _pipe(df, [
         {"dissect": {"field": "line", "pattern": "%{uid}|%{etype}|%{eid}"}}])
     return out.select("event_id", "uid", "etype", "eid")
 
@@ -132,7 +83,7 @@ def q_pipe_kv(spark, sf_dir):
     ev = load(spark, sf_dir, "events")
     df = ev.withColumn("msg", F.format_string(
         "type=%s user=%d", F.col("event_type"), F.col("user_id")))
-    out = _pipe(spark, df, [
+    out = _pipe(df, [
         {"kv": {"field": "msg", "field_split": " ", "value_split": "=",
                 "include_keys": ["type", "user"], "prefix": "kv_"}}])
     return out.select("event_id", "kv_type", "kv_user")
@@ -153,7 +104,7 @@ def q_pipe_kv_dynamic(spark, sf_dir):
     ev = load(spark, sf_dir, "events")
     df = ev.withColumn("msg", F.format_string(
         "user=%d type=%s", F.col("user_id"), F.col("event_type")))
-    out = _pipe(spark, df, [
+    out = _pipe(df, [
         {"kv": {"field": "msg", "field_split": " ", "value_split": "="}},
         {"set": {"field": "uid_lifted", "copy_from": "user"}},
         {"set": {"field": "is_err", "value": "Y", "if": "ctx.type == 'error'"}},
@@ -175,7 +126,7 @@ def q_pipe_csv(spark, sf_dir):
     df = doc.withColumn("line", F.concat_ws(",",
                                             "source", "lang",
                                             F.col("n_chars").cast("string")))
-    out = _pipe(spark, df, [
+    out = _pipe(df, [
         {"csv": {"field": "line",
                  "target_fields": ["c_source", "c_lang", "c_chars"]}}])
     return out.select("doc_id", "c_source", "c_lang", "c_chars")
@@ -190,7 +141,7 @@ FROM documents
 
 def q_pipe_json(spark, sf_dir):
     ev = _spread(load(spark, sf_dir, "events"), "event_id")
-    out = _pipe(spark, ev, [
+    out = _pipe(ev, [
         {"json": {"field": "props", "target_field": "props_obj",
                   "schema": "k BIGINT"}}])
     return out.select("event_id", fcol("props_obj")["k"].alias("k"))
@@ -210,7 +161,7 @@ def q_pipe_redact(spark, sf_dir):
                          (F.col("doc_id") % 254 + 1).cast("int"))
     df = doc.withColumn("msg", F.concat(F.lit("from "), ip,
                                         F.lit(" by "), F.col("source")))
-    out = _pipe(spark, df, [
+    out = _pipe(df, [
         {"redact": {"field": "msg", "patterns": ["%{IP:IP}"],
                     "prefix": "[", "suffix": "]"}}])
     return out.select("doc_id", F.col("msg").alias("redacted"))
@@ -228,7 +179,7 @@ def q_pipe_failure_preserve(spark, sf_dir):
     df = ev.withColumn("msg", F.when(F.col("event_type") == "error",
                                      F.lit("UNPARSEABLE !!"))
                        .otherwise(F.format_string("%d ok", F.col("user_id"))))
-    out = _pipe(spark, df, [
+    out = _pipe(df, [
         {"grok": {"field": "msg", "patterns": ["^%{INT:uid2:int} ok$"]}}])
     return out.select(
         "event_id", "uid2",
@@ -254,7 +205,7 @@ def q_pipe_append(spark, sf_dir):
     ev = load(spark, sf_dir, "events")
     df = ev.withColumn("arr", F.array(F.col("event_type"))) \
            .withColumn("status", F.col("props"))
-    out = _pipe(spark, df, [
+    out = _pipe(df, [
         {"append": {"field": "arr", "value": ["x1", "x2", "{{event_type}}"],
                     "allow_duplicates": False}},
         {"append": {"field": "event_type", "value": ["extra"]}},
@@ -288,7 +239,7 @@ def q_pipe_dot_expander(spark, sf_dir):
     root column (static dotted columns are already the expanded form)."""
     ev = load(spark, sf_dir, "events")
     df = ev.withColumn("msg", F.format_string("geo.city=C%d", F.col("user_id")))
-    out = _pipe(spark, df, [
+    out = _pipe(df, [
         {"kv": {"field": "msg", "field_split": " ", "value_split": "="}},
         {"dot_expander": {"field": "geo.city"}},
     ])
@@ -304,7 +255,7 @@ def q_pipe_date_index_name(spark, sf_dir):
     """date_index_name: the ES date-math index expression
     <prefix{date||/M{fmt|tz}}> (DateIndexNameProcessor shape)."""
     ev = load(spark, sf_dir, "events")
-    out = _pipe(spark, ev, [
+    out = _pipe(ev, [
         {"date_index_name": {"field": "ts", "index_name_prefix": "monthly-",
                              "date_rounding": "M",
                              "index_name_format": "yyyy-MM-dd"}}])
@@ -324,7 +275,7 @@ def q_pipe_drop_fail_terminate(spark, sf_dir):
     EventProcessor.java:185-189), terminate stops the chain for the row,
     fail restores pristine + tags; all three gate the late `set`."""
     ev = load(spark, sf_dir, "events")
-    out = _pipe(spark, ev, [
+    out = _pipe(ev, [
         {"drop": {"if": "ctx.event_type == 'error'"}},
         {"terminate": {"if": "ctx.event_type == 'click'"}},
         {"fail": {"message": "boom", "if": "ctx.event_type == 'purchase'"}},
@@ -354,14 +305,16 @@ def q_enrich_geoip_range(spark, sf_dir):
     def ip2long(a, b):
         return (a << 24) | (b << 16)
 
-    dim = _memo_dim(spark, "geoip_range", lambda: spark.createDataFrame(
-        [(ip2long(10, 0), ip2long(10, 100) - 1, "low"),
-         (ip2long(10, 100), ip2long(10, 200) - 1, "high"),
-         (ip2long(10, 42), ip2long(10, 43) - 1, "answer")],  # overlaps 'low'
-        "lo long, hi long, zone string"))
+    dim = local_frame(spark, [
+        (ip2long(10, 0), ip2long(10, 100) - 1, "low"),
+        (ip2long(10, 100), ip2long(10, 200) - 1, "high"),
+        (ip2long(10, 42), ip2long(10, 43) - 1, "answer")],  # overlaps 'low'
+        T.StructType([T.StructField("lo", T.LongType()),
+                      T.StructField("hi", T.LongType()),
+                      T.StructField("zone", T.StringType())]))
     df = ev.withColumn(
         "ip", F.format_string("10.%d.0.1", (F.col("user_id") % 200).cast("int")))
-    out = _pipe(spark, df, [
+    out = _pipe(df, [
         {"geoip": {"field": "ip", "database_file": "R.mmdb",
                    "range_keys": ["lo", "hi"], "target_field": "geo",
                    "properties": ["zone"]}}],
@@ -386,7 +339,7 @@ def q_pipe_mutate_chain(spark, sf_dir):
     df = doc.withColumn(
         "size_str",
         F.format_string("%dkb", F.col("n_chars").cast("long") + 1))
-    out = _pipe(spark, df, [
+    out = _pipe(df, [
         {"set": {"field": "marker", "value": "doc"}},
         {"uppercase": {"field": "lang", "target_field": "lang_up"}},
         {"gsub": {"field": "text", "target_field": "text_mod",
@@ -412,7 +365,7 @@ FROM documents
 
 def q_pipe_split_sort_join(spark, sf_dir):
     doc = _spread(load(spark, sf_dir, "documents"), "doc_id", waves=1)
-    out = _pipe(spark, doc, [
+    out = _pipe(doc, [
         {"split": {"field": "text", "separator": " ",
                    "target_field": "words"}},
         {"sort": {"field": "words", "order": "desc"}},
@@ -444,7 +397,7 @@ FROM w JOIN s USING (doc_id)
 def q_pipe_foreach(spark, sf_dir):
     doc = load(spark, sf_dir, "documents")
     df = doc.withColumn("w5", F.slice(F.split("text", " "), 1, 5))
-    out = _pipe(spark, df, [
+    out = _pipe(df, [
         {"foreach": {"field": "w5",
                      "processor": {"uppercase": {"field": "_ingest._value"}}}},
         {"join": {"field": "w5", "separator": ",", "target_field": "up5"}},
@@ -477,7 +430,7 @@ def q_pipe_date(spark, sf_dir):
               "%02d %s %04d %02d:%02d:%02d",
               F.dayofmonth("ts"), fr_month, F.year("ts"),
               F.hour("ts"), F.minute("ts"), F.second("ts"))))
-    out = _pipe(spark, df, [
+    out = _pipe(df, [
         {"date": {"field": "date_str", "formats": ["dd/MM/yyyy HH:mm:ss"],
                   "timezone": "UTC", "target_field": "ts_iso"}},
         {"date": {"field": "date_fr", "formats": ["dd MMMM yyyy HH:mm:ss"],
@@ -496,7 +449,7 @@ FROM events
 
 def q_pipe_fingerprint(spark, sf_dir):
     doc = load(spark, sf_dir, "documents")
-    out = _pipe(spark, doc, [
+    out = _pipe(doc, [
         {"fingerprint": {"fields": ["source", "lang"], "method": "MD5",
                          "target_field": "fp"}}])
     return out.select("doc_id", "fp")
@@ -522,7 +475,7 @@ def q_pipe_url_html(spark, sf_dir):
               F.col("source"), F.col("lang"), F.col("doc_id")))
           .withColumn("html", F.format_string(
               "<p>%s</p><em>%s</em>", F.col("lang"), F.col("source"))))
-    out = _pipe(spark, df, [
+    out = _pipe(df, [
         {"urldecode": {"field": "enc"}},
         {"uri_parts": {"field": "url_str"}},
         {"html_strip": {"field": "html"}},
@@ -552,7 +505,7 @@ def q_pipe_script(spark, sf_dir):
     ``=~`` (Matcher.find) and ``==~`` (entire-string match) lower to JVM
     rlike — zero Python in the plan."""
     doc = load(spark, sf_dir, "documents")
-    out = _pipe(spark, doc, [
+    out = _pipe(doc, [
         {"script": {"lang": "painless",
                     "source": "ctx['slug'] = ctx['lang'] + '-' + params['suffix']",
                     "params": {"suffix": "v1"}}},
@@ -613,7 +566,7 @@ def q_pipe_script_loop(spark, sf_dir):
     validated AST -> Arrow-batched execution with an iteration watchdog).
     Computes a word-length histogram facet and a checksum over the text."""
     doc = load(spark, sf_dir, "documents")
-    out = _pipe(spark, doc, [
+    out = _pipe(doc, [
         {"script": {"lang": "painless", "source": """
             def parts = ctx.text.splitOnToken(' ');
             int big = 0;
@@ -668,8 +621,8 @@ def q_pipe_user_agent(spark, sf_dir):
               "Safari/537.36")
     ).otherwise(F.lit("curl/8.4.0"))
     df = ev.withColumn("ua", ua)
-    out = _pipe(spark, df, [{"user_agent": {"field": "ua",
-                                            "extract_device_type": True}}])
+    out = _pipe(df, [{"user_agent": {"field": "ua",
+                                     "extract_device_type": True}}])
     return out.select("event_id",
                       fcol("user_agent.name").alias("ua_name"),
                       fcol("user_agent.version").alias("ua_version"),
@@ -707,7 +660,7 @@ def q_pipe_network_direction(spark, sf_dir):
                F.format_string("10.0.0.%d", (F.col("user_id") % 250 + 1).cast("int")))
         .otherwise(F.format_string("8.8.%d.1", (F.col("user_id") % 250).cast("int"))))
         .withColumn("destination.ip", F.lit("192.168.1.50")))
-    out = _pipe(spark, df, [
+    out = _pipe(df, [
         {"network_direction": {"internal_networks": ["private"]}}])
     return out.select("event_id", fcol("network.direction").alias("direction"))
 
@@ -740,7 +693,7 @@ def q_pipe_community_id(spark, sf_dir):
           .withColumn("rev.dip", fcol("source.ip"))
           .withColumn("rev.sport", fcol("destination.port"))
           .withColumn("rev.dport", fcol("source.port")))
-    out = _pipe(spark, df, [
+    out = _pipe(df, [
         {"community_id": {}},
         {"community_id": {"source_ip": "rev.sip",
                           "destination_ip": "rev.dip",
@@ -768,7 +721,7 @@ def q_pipe_registered_domain(spark, sf_dir):
               F.concat(F.col("source"), F.lit(".example.com"))) \
         .otherwise(F.concat(F.lit("a.b."), F.col("source"), F.lit(".io")))
     df = doc.withColumn("domain_field", dom)
-    out = _pipe(spark, df, [{"registered_domain": {"field": "domain_field"}}])
+    out = _pipe(df, [{"registered_domain": {"field": "domain_field"}}])
     return out.select("doc_id",
                       F.col("registered_domain").alias("registered"),
                       F.col("top_level_domain").alias("tld"),
@@ -822,9 +775,10 @@ _EV_CATEGORY = [("click", "ui"), ("view", "ui"), ("purchase", "commerce"),
 
 def q_enrich_lookup(spark, sf_dir):
     ev = load(spark, sf_dir, "events")
-    dim = _memo_dim(spark, "etype_dim", lambda: spark.createDataFrame(
-        _EV_CATEGORY, "event_type string, category string"))
-    out = _pipe(spark, ev, [
+    dim = local_frame(spark, _EV_CATEGORY, T.StructType(
+        [T.StructField("event_type", T.StringType()),
+         T.StructField("category", T.StringType())]))
+    out = _pipe(ev, [
         {"lookup": {"field": "event_type", "table": "etype_dim",
                     "target_field": "et"}}],
         dims={"etype_dim": dim})
@@ -840,18 +794,8 @@ FROM events
 """
 
 
-#: per-application Router memo for the routing demo queries: the Router
-#: (and its compiled-plan cache) is pure config — rebuilding it per call
-#: threw away the compiled WHEN-chains and pipeline Columns each bench
-#: pass.  Nothing data-derived lives on the Router.
-_EVENTS_ROUTER: dict = {}
-
-
-def _events_router(spark):
-    app = spark.sparkContext.applicationId
-    cached = _EVENTS_ROUTER.get(app)
-    if cached is not None:
-        return cached
+def _events_router():
+    """Router of the routing demo queries."""
     from .router import Router
     reg = PipelineRegistry()
     reg.register("err-pipe", {"processors": [
@@ -864,14 +808,11 @@ def _events_router(spark):
     reg.register("alert-pipe", {"processors": [
         {"set": {"field": "alerted", "value": "yes"}},
     ]})
-    router = Router(registry=reg, routing={
+    return Router(registry=reg, routing={
         "logs-ev.error-default": "err-pipe",
         "logs-ev.std-default": "std-pipe",
         "alerts-high": "alert-pipe",
     })
-    _EVENTS_ROUTER.clear()
-    _EVENTS_ROUTER[app] = router
-    return router
 
 
 def q_route_fanout(spark, sf_dir):
@@ -884,7 +825,7 @@ def q_route_fanout(spark, sf_dir):
                       F.when(F.col("event_type") == "error", "ev.error")
                       .otherwise("ev.std"))
           .withColumn("data_stream.namespace", F.lit("default")))
-    out = _events_router(spark).execute(df)
+    out = _events_router().execute(df)
     return out.select("event_id", F.col("__sink").alias("sink"),
                       "severity", "alerted")
 
@@ -1115,15 +1056,6 @@ def _shingles_expr():
         "i -> concat_ws(' ', slice(split(text, ' '), i + 1, 3))))")
 
 
-#: compiled-plan memo for the shared minhash-LSH subtree (3 queries build
-#: it per bench pass): (appId,) -> (analyzed documents plan, reps, pairs).
-#: sameResult-gated like the other compile caches — a hit is provably the
-#: same input relation; reps/pairs are lazy, so every downstream action
-#: (localCheckpoint, persist, noop write) recomputes from parquet exactly
-#: as a freshly built plan would.
-_MINHASH_MEMO: dict = {}
-
-
 def _minhash_reps_and_pairs(spark, sf_dir):
     """Shared minhash-LSH core: exact-dedup representatives (with their
     shingle sets) + in-bucket candidate pairs.  Expression-heavy steps are
@@ -1131,14 +1063,6 @@ def _minhash_reps_and_pairs(spark, sf_dir):
     trees) — the call-by-call Column builds were ~0.8 s of driver time
     per invocation at bench scale."""
     doc = load(spark, sf_dir, "documents")
-    try:
-        app = spark.sparkContext.applicationId
-        jplan = doc._jdf.queryExecution().analyzed()
-        ent = _MINHASH_MEMO.get(app)
-        if ent is not None and ent[0].sameResult(jplan):
-            return ent[1], ent[2]
-    except Exception:
-        app = jplan = None
     reps = _spread(doc.groupBy("text").agg(F.min("doc_id").alias("doc_id")),
                    "doc_id")
     reps = reps.withColumn("sh", _shingles_expr())
@@ -1166,9 +1090,6 @@ def _minhash_reps_and_pairs(spark, sf_dir):
         f"transform(slice(ds, i + 2, {_MH_CAP}), "
         "y -> named_struct('a', x, 'b', y))))")).alias("p"))
         .select("p.a", "p.b").distinct())
-    if app is not None:
-        _MINHASH_MEMO.clear()
-        _MINHASH_MEMO[app] = (jplan, reps, pairs)
     return reps, pairs
 
 
@@ -1387,8 +1308,12 @@ def q_dedup_ngram_jaccard(spark, sf_dir):
     inter = F.size(F.array_intersect("sha", "shb"))
     union = F.size("sha") + F.size("shb") - inter
     jac = F.floor(inter * 100 / union).cast("long")
-    return (j.select("a", "b", jac.alias("jac_pct"))
-            .filter(F.col("jac_pct") >= 50))
+    # the scored pairs are bucket-capped too: materialize them so reps can
+    # be released here rather than stay in the CacheManager for the app
+    out = (j.select("a", "b", jac.alias("jac_pct"))
+           .filter(F.col("jac_pct") >= 50)).localCheckpoint(eager=True)
+    reps.unpersist()
+    return out
 
 
 def _jaccard_oracle() -> str:
@@ -2275,6 +2200,7 @@ def q_stream_flagship(spark, sf_dir):
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     src = spark.readStream.schema(schema).parquet(d)
     acc: list[tuple] = []
+    router = _events_router()
 
     def process(batch_df, batch_id):
         df = (batch_df
@@ -2283,7 +2209,7 @@ def q_stream_flagship(spark, sf_dir):
                           F.when(F.col("event_type") == "error", "ev.error")
                           .otherwise("ev.std"))
               .withColumn("data_stream.namespace", F.lit("default")))
-        out = _events_router(spark).execute(df)
+        out = router.execute(df)
         rows = (out.groupBy("__sink", "severity")
                 .agg(F.count(F.lit(1)).alias("n")).collect())
         acc.extend((r["__sink"], r["severity"], int(r["n"])) for r in rows)
@@ -2308,64 +2234,6 @@ FROM events GROUP BY 1, 2
 
 
 # ---------------------------------------------------------------- dicts ----
-
-#: queries whose builder is a PURE PLAN FUNCTION of the named input
-#: tables — no collect/checkpoint/persist during construction — mapped to
-#: the tables they read.  For these (and only these) the compiled lazy
-#: frame is reusable whenever the input relations are provably unchanged
-#: (Catalyst sameResult, the CacheManager's own plan-identity test), so
-#: repeated invocations skip the 0.2-0.4 s driver-side plan rebuild.
-#: Excluded by construction: ann_ivf/ann_ivf_kmeans (driver-state Lloyd
-#: training collects data-derived centroids), dedup_clusters (data-driven
-#: convergence loop over eager checkpoints), dedup_ngram_jaccard (eager
-#: checkpoint+persist in the builder), stream_* (per-call streaming
-#: machinery) — memoizing any of those would cache data-derived results,
-#: not a plan.  The returned frames are lazy: every action recomputes
-#: from parquet.
-_PURE_PLAN_TABLES = {
-    "agg_sink_counts": ("events",),
-    "sessionize": ("events",),
-    "conv_stats": ("events",),
-    "dedup_exact": ("documents",),
-    "doc_fingerprint": ("documents",),
-    "dedup_simhash": ("documents",),
-    "dedup_embedding_cosine": ("embeddings",),
-    "decontaminate_ngram": ("documents",),
-    "doc_quality": ("documents",),
-    "lang_id_trigram": ("documents",),
-    "token_rolling_hash": ("documents",),
-    "ann_cosine_topk": ("embeddings",),
-    "ann_lsh_bucketed": ("embeddings",),
-    "ann_recall": ("embeddings",),
-    "multimodal_av": ("documents",),
-    "multimodal_video": ("documents",),
-}
-_QPLAN_MEMO: dict = {}
-
-
-def _memo_pure_plan(name, fn, tables):
-    def wrapped(spark, sf_dir):
-        try:
-            app = spark.sparkContext.applicationId
-            plans = [load(spark, sf_dir, t)._jdf.queryExecution().analyzed()
-                     for t in tables]
-            ent = _QPLAN_MEMO.get((app, name, sf_dir))
-            if (ent is not None and len(ent[0]) == len(plans)
-                    and all(a.sameResult(b)
-                            for a, b in zip(ent[0], plans))):
-                return ent[1]
-        except Exception:
-            return fn(spark, sf_dir)
-        out = fn(spark, sf_dir)
-        _QPLAN_MEMO[(app, name, sf_dir)] = (plans, out)
-        while len(_QPLAN_MEMO) > 128:
-            _QPLAN_MEMO.pop(next(iter(_QPLAN_MEMO)))
-        return out
-    wrapped.__name__ = fn.__name__
-    wrapped.__doc__ = fn.__doc__
-    wrapped.__wrapped__ = fn
-    return wrapped
-
 
 QUERIES = {
     # exactly 50 entries: the driver's correctness gate records the first
@@ -2425,9 +2293,6 @@ QUERIES = {
     "stream_dedup": q_stream_dedup,
     "stream_flagship": q_stream_flagship,
 }
-
-for _qname, _qtables in _PURE_PLAN_TABLES.items():
-    QUERIES[_qname] = _memo_pure_plan(_qname, QUERIES[_qname], _qtables)
 
 ORACLES = {
     "pipe_grok_typed": O_GROK,

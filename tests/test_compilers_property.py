@@ -140,6 +140,20 @@ def test_grok_backtracking_risk_detector():
     assert c.compile(["%{QS:q}"]).risky == [True]
 
 
+def test_grok_worker_compile_cache_is_bounded():
+    """The worker-side grok compile cache keeps at most 64 pattern sets."""
+    from logstash_filter_elastic_integration_spark.functions.grok import (
+        cached_compile)
+
+    cached_compile.cache_clear()
+    for i in range(80):
+        cached_compile((f"^{i} %{{WORD:w}}$",))
+    info = cached_compile.cache_info()
+    assert info.misses == 80 and info.currsize <= 64
+    assert list(cached_compile(("^79 %{WORD:w}$",)).fields) == ["w"]
+    assert cached_compile.cache_info().hits == 1
+
+
 # -------------------------- painless interpreter surface (r3 additions) ----
 
 painless_idents = st.text(alphabet=string.ascii_lowercase, min_size=1,

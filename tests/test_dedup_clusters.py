@@ -98,3 +98,14 @@ def test_kmeans_assignment_is_shuffle_free_projection(spark):
     assert "Sort" not in assignment
     assert "Window" not in assignment
     assert "element_at" in assignment  # the literal-centroid argmin
+
+
+def test_ngram_jaccard_leaves_nothing_cached(spark):
+    """dedup_ngram_jaccard releases its persisted representatives before it
+    returns, so later minhash builds cannot be served from that cache."""
+    from logstash_filter_elastic_integration_spark.queries import (
+        QUERIES, _minhash_reps_and_pairs)
+    QUERIES["dedup_ngram_jaccard"](spark, SF)
+    reps, _ = _minhash_reps_and_pairs(spark, SF)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.lookupCachedData(reps._jdf).isEmpty()

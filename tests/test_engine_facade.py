@@ -10,12 +10,14 @@ def test_sprintf_template_resolution_and_none_bypass(spark):
         [("a", "x"), ("b", "y"), (None, "z")], "service string, payload string")
     out = {r["payload"]: r.asDict() for r in eng.filter(df).collect()}
     assert out["x"]["handled"] == "a"
-    # resolved to unregistered 'svc-b' -> passthrough (template path does
-    # not hard-fail; the reference skips unresolvable pipelines)
+    # resolved to unregistered 'svc-b' -> the row fails with "pipeline not
+    # loaded" (EventProcessor.java:160-168), as through Router
     assert out["y"]["handled"] is None
-    assert (out["y"]["tags"] or []) == []
-    # unresolved field -> skip
+    assert "_ingest_pipeline_failure" in (out["y"]["tags"] or [])
+    assert out["y"]["__failure"]["message"] == "pipeline not loaded [svc-b]"
+    # unresolved field -> passes through unmodified
     assert out["z"]["handled"] is None
+    assert (out["z"]["tags"] or []) == []
 
 
 def test_directory_registration(spark, tmp_path):
@@ -67,3 +69,13 @@ def test_painless_containskey(spark):
     by = {r["maybe"]: r for r in out}
     assert by["v"]["has_it"] == "yes"
     assert by[None]["has_it"] is None
+
+
+def test_template_reads_nested_field_refs(spark):
+    """``%{[a][b]}`` in a pipeline_name template reads the dotted column."""
+    eng = SparkIngestFilter(
+        pipelines={"svc-a": {"processors": [
+            {"set": {"field": "handled", "value": "a"}}]}},
+        pipeline_name="svc-%{[svc][name]}")
+    df = spark.createDataFrame([("a",)], "`svc.name` string")
+    assert eng.filter(df).first()["handled"] == "a"
